@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ai_etl_studio_spark.catalog import load_table
 from ai_etl_studio_spark.functions.exact import sql_dsum, dsum
+from ai_etl_studio_spark.layout_cache import ensure_layout, layout_name
 from ai_etl_studio_spark.operators import register
 from ai_etl_studio_spark.plans.snapshot import capture_stage
 
@@ -1085,44 +1086,6 @@ def null_ordering_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LAYOUT_BUCKETS = 16
 
 
-def _layout_ident(
-    kind: str,
-    sf_dir: str,
-    base_dir: str | None = None,
-    tables: tuple[str, ...] = ("orders",),
-):
-    """(name_prefix, path_root) for a persisted storage layout of
-    ``sf_dir``, fingerprinted on the source data (size+mtime of EVERY
-    table the layout projects — r8 ADVICE: fingerprinting only orders
-    let a regenerated lineitem.parquet silently reuse the stale
-    bucketed lineitem projection) and on base_dir (same corpus, two
-    locations -> two names — the r3 ADVICE rule the pagerank/IVF
-    indexes follow)."""
-    import hashlib
-    import os
-    import pathlib
-
-    if base_dir is None:
-        base_dir = str(
-            pathlib.Path(__file__).resolve().parents[2] / ".cache" / kind
-        )
-    stats = "|".join(
-        f"{t}:{(st := os.stat(os.path.join(sf_dir, f'{t}.parquet'))).st_size}"
-        f":{int(st.st_mtime)}"
-        for t in tables
-    )
-    fp = hashlib.sha1(f"{base_dir}|{sf_dir}|{stats}".encode()).hexdigest()[:12]
-    root = os.path.join(base_dir, fp)
-    # cache hygiene (r8 verdict item 6): record this layout's sources,
-    # drop stranded sibling fingerprints whose sources changed/vanished
-    from ai_etl_studio_spark.layout_cache import manifest_and_gc
-
-    manifest_and_gc(
-        root, [os.path.join(sf_dir, f"{t}.parquet") for t in tables]
-    )
-    return f"{kind}_{fp}", root
-
-
 def ensure_bucketed_orderkey_tables(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> tuple[str, str]:
@@ -1131,14 +1094,11 @@ def ensure_bucketed_orderkey_tables(
     sessions re-register the existing files with a matching CLUSTERED
     BY spec, so the fact-fact join reads pre-bucketed sides — at write
     time this is the layout decision that removes the join shuffle for
-    EVERY downstream orderkey join, amortized across queries."""
-    import os
-
+    EVERY downstream orderkey join, amortized across queries. Both
+    projections share one layout, fingerprinted on BOTH source tables,
+    so a regenerated lineitem.parquet cannot reuse a stale projection."""
     from ai_etl_studio_spark.functions.exact import net_cents
 
-    prefix, root = _layout_ident(
-        "bucketed_ok", sf_dir, base_dir, tables=("lineitem", "orders")
-    )
     specs = {
         "li": (
             lambda: load_table(spark, sf_dir, "lineitem").select(
@@ -1155,33 +1115,17 @@ def ensure_bucketed_orderkey_tables(
             "o_orderkey BIGINT, o_orderstatus STRING",
         ),
     }
-    names = {}
-    for part, (dfn, key, ddl) in specs.items():
-        tbl = f"{prefix}_{part}"
-        path = os.path.join(root, part)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            (
-                dfn()
-                .repartition(_LAYOUT_BUCKETS, key)
-                .write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(_LAYOUT_BUCKETS, key)
-                .sortBy(key)
-                .option("path", path)
-                .saveAsTable(tbl)
-            )
-        elif not spark.catalog.tableExists(tbl):
-            spark.sql(
-                f"""
-                CREATE TABLE {tbl} ({ddl})
-                USING PARQUET
-                CLUSTERED BY ({key}) SORTED BY ({key})
-                INTO {_LAYOUT_BUCKETS} BUCKETS
-                LOCATION '{path}'
-                """
-            )
-        names[part] = tbl
-    return names["li"], names["o"]
+    return tuple(
+        ensure_layout(
+            spark, "bucketed_ok", sf_dir, ("lineitem", "orders"),
+            (_LAYOUT_BUCKETS,), build,
+            part=part,
+            columns=columns,
+            bucket=(_LAYOUT_BUCKETS, key),
+            base_dir=base_dir,
+        )[0]
+        for part, (build, key, columns) in specs.items()
+    )
 
 
 @register(
@@ -1230,25 +1174,18 @@ def ensure_month_partitioned_orders(
     """Build-once orders re-written hive-partitioned by order month
     (directory per o_month) and return the path — the layout that turns
     a month filter into directory pruning instead of a full scan."""
-    import os
-
-    prefix, root = _layout_ident("opart_month", sf_dir, base_dir)
-    path = os.path.join(root, "orders_by_month")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                "o_orderkey",
-                "o_orderpriority",
-                "o_totalprice",
-                F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
-            )
-            .repartition("o_month")
-            .write.mode("overwrite")
-            .partitionBy("o_month")
-            .parquet(path)
-        )
-    return path
+    return ensure_layout(
+        spark, "opart_month", sf_dir, ("orders",), (),
+        lambda: load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_orderpriority",
+            "o_totalprice",
+            F.date_format("o_orderdate", "yyyy-MM").alias("o_month"),
+        ),
+        part="orders_by_month",
+        partition_by="o_month",
+        base_dir=base_dir,
+    )[1]
 
 
 @register(
@@ -1311,11 +1248,8 @@ def ensure_zorder_orders(
     The scaling constants come from the data at write time; they shape
     only the LAYOUT — query results are layout-independent, which is
     why the oracle mirrors the box query, not the Morton math."""
-    import os
 
-    prefix, root = _layout_ident("zorder_cd", sf_dir, base_dir)
-    path = os.path.join(root, "orders_zorder")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build() -> DataFrame:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -1355,15 +1289,18 @@ def ensure_zorder_orders(
                     F.shiftrightunsigned(zy, i).bitwiseAND(F.lit(1)), 2 * i
                 )
             )
-        (
+        return (
             w.withColumn("zval", zval)
             .repartitionByRange(_Z_FILES, "zval")
             .sortWithinPartitions("zval")
             .drop("zval", "c0", "c1", "d0", "d1")
-            .write.mode("overwrite")
-            .parquet(path)
         )
-    return path
+
+    return ensure_layout(
+        spark, "zorder_cd", sf_dir, ("orders",), (_Z_FILES,), build,
+        part="orders_zorder",
+        base_dir=base_dir,
+    )[1]
 
 
 @register(
@@ -1424,12 +1361,9 @@ def ensure_month_dim(
     dynamic partition pruning: the FACT carries no month literal, the
     DIM carries the human predicate (year/quarter), and the join key is
     the fact's partition column."""
-    import os
-
-    prefix, root = _layout_ident("opart_month", sf_dir, base_dir)
-    path = os.path.join(root, "month_dim")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
+    return ensure_layout(
+        spark, "opart_month", sf_dir, ("orders",), (),
+        lambda: (
             load_table(spark, sf_dir, "orders")
             .select(F.date_format("o_orderdate", "yyyy-MM").alias("m_month"))
             .distinct()
@@ -1442,10 +1376,10 @@ def ensure_month_dim(
                 + F.lit(1),
             )
             .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
+        ),
+        part="month_dim",
+        base_dir=base_dir,
+    )[1]
 
 
 @register(
@@ -1608,38 +1542,36 @@ _CBO_STATS_COLUMNS: dict[str, tuple[str, ...]] = {
     "part": ("p_partkey", "p_type"),
 }
 
-#: (applicationId, fingerprint) pairs already ANALYZE-d this app —
-#: stats live in the session catalog, so one collection per app+corpus
-#: amortizes across every CBO query (the 100 TB discipline: ANALYZE is
-#: a nightly maintenance job, not a per-query cost).
-_STATS_READY: set[tuple[str, str]] = set()
-
 
 def ensure_column_stats(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Register the corpus tables as external catalog tables (no data
     copy — ``CREATE TABLE … USING parquet LOCATION``) and run
-    ``ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS`` once per
-    (application, corpus). Returns {logical_name: catalog_name}.
+    ``ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS`` on each one the
+    session catalog holds no statistics for. Returns
+    {logical_name: catalog_name}. Stats live in the session catalog, so
+    one collection per session and corpus amortizes across every CBO
+    query (the 100 TB discipline: ANALYZE is a nightly maintenance job,
+    not a per-query cost).
 
-    Catalog tables are fingerprinted on the source stats (size+mtime,
-    the layout-tier rule) so a regenerated corpus gets fresh tables and
-    fresh statistics rather than silently reusing stale NDVs — stale
-    stats are WORSE than no stats, because the reorder confidently
-    picks a wrong tree instead of keeping the written one."""
-    import hashlib
+    Catalog tables carry the layout fingerprint (layout_cache: source
+    size+mtime and the analyzed columns) so a regenerated corpus gets
+    fresh tables and fresh statistics rather than silently reusing
+    stale NDVs — stale stats are WORSE than no stats, because the
+    reorder confidently picks a wrong tree instead of keeping the
+    written one."""
     import os
 
-    stats = "|".join(
-        f"{t}:{(st := os.stat(os.path.join(sf_dir, f'{t}.parquet'))).st_size}"
-        f":{int(st.st_mtime)}"
-        for t in sorted(_CBO_STATS_COLUMNS)
+    name, _ = layout_name(
+        "cbo", sf_dir, tuple(sorted(_CBO_STATS_COLUMNS)),
+        tuple(_CBO_STATS_COLUMNS.items()),
     )
-    fp = hashlib.sha1(f"{sf_dir}|{stats}".encode()).hexdigest()[:12]
-    names = {t: f"cbo_{fp}_{t}" for t in _CBO_STATS_COLUMNS}
-    key = (spark.sparkContext.applicationId, fp)
-    if key in _STATS_READY:
-        return names
+    names = {t: f"{name}_{t}" for t in _CBO_STATS_COLUMNS}
     for t, cols in _CBO_STATS_COLUMNS.items():
+        if spark.catalog.tableExists(names[t]) and any(
+            r.col_name == "Statistics" and "rows" in r.data_type
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {names[t]}").collect()
+        ):
+            continue
         loc = os.path.join(sf_dir, f"{t}.parquet")
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {names[t]} "
@@ -1649,7 +1581,6 @@ def ensure_column_stats(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             f"ANALYZE TABLE {names[t]} COMPUTE STATISTICS "
             f"FOR COLUMNS {', '.join(cols)}"
         )
-    _STATS_READY.add(key)
     return names
 
 

@@ -15,6 +15,30 @@ from ai_etl_studio_spark.session import get_spark
 SF_DIR = "/root/testdata/sf0.001"
 
 
+class _Located(Exception):
+    """Stops ``layout_cache.ensure_layout`` right after its manifest
+    write, carrying the layout directory it resolved."""
+
+
+def locate_layout(monkeypatch, ensure, sf_dir, base_dir=None) -> str:
+    """The layout directory an ``ensure_*`` builder resolves for
+    ``sf_dir`` — manifest written and siblings swept, as in a real call
+    — without building anything or touching Spark."""
+    from ai_etl_studio_spark import layout_cache
+
+    real = layout_cache.manifest_and_gc
+
+    def stop(root, sources):
+        real(root, sources)
+        raise _Located(root)
+
+    with monkeypatch.context() as m:
+        m.setattr(layout_cache, "manifest_and_gc", stop)
+        with pytest.raises(_Located) as located:
+            ensure(None, sf_dir, base_dir)
+    return located.value.args[0]
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="ai-etl-studio-spark-tests", shuffle_partitions=8)

@@ -1,7 +1,7 @@
 """Layout-cache hygiene (r8 verdict item 6): fingerprinted build-once
-layouts get a source manifest at ident time, and stranded sibling
-fingerprints — sources changed or vanished — are swept. No Spark
-needed: ident functions only stat the source files."""
+layouts get a source manifest when they are resolved, and stranded
+sibling fingerprints — sources changed or vanished — are swept. No
+Spark needed: resolving a layout only stats the source files."""
 
 from __future__ import annotations
 
@@ -14,6 +14,7 @@ from ai_etl_studio_spark.layout_cache import (
     manifest_and_gc,
     write_manifest,
 )
+from tests.conftest import locate_layout
 
 
 def _mk_source(tmp_path, name, content=b"v1"):
@@ -65,35 +66,80 @@ def test_vanished_source_and_manifestless_removed(tmp_path):
 def test_unreadable_manifest_treated_as_stranded(tmp_path):
     src = _mk_source(tmp_path, "a.parquet")
     base = tmp_path / "kind"
-    bad = base / "fp_bad"
-    bad.mkdir(parents=True)
-    (bad / "_manifest.json").write_text("{not json")
+    (base / "fp_bad").mkdir(parents=True)
+    (base / "fp_bad.manifest.json").write_text("{not json")
     removed = manifest_and_gc(str(base / "fp_live"), [src])
     assert removed == ["fp_bad"]
 
 
-def test_layout_ident_sweeps_regenerated_corpus(tmp_path):
-    """End-to-end through extended._layout_ident: regenerating
-    lineitem.parquet (the r8 ADVICE scenario) strands the old bucketed
-    fingerprint and the next ident call removes it."""
-    from ai_etl_studio_spark.operators.extended import _layout_ident
-
+def _mk_sf(tmp_path, tables=("lineitem", "orders")):
     sf = tmp_path / "sf"
     sf.mkdir()
-    for t in ("lineitem", "orders"):
+    for t in tables:
         (sf / f"{t}.parquet").write_bytes(b"v1")
+    return sf
+
+
+def test_layout_ident_sweeps_regenerated_corpus(tmp_path, monkeypatch):
+    """End-to-end through layout_cache.ensure_layout: regenerating
+    lineitem.parquet (the r8 ADVICE scenario) strands the old bucketed
+    fingerprint and the next ensure call removes it."""
+    from ai_etl_studio_spark.operators.extended import (
+        ensure_bucketed_orderkey_tables,
+    )
+
+    sf = _mk_sf(tmp_path)
     base = str(tmp_path / "bucketed_ok")
-    _, root1 = _layout_ident(
-        "bucketed_ok", str(sf), base, tables=("lineitem", "orders")
+    root1 = locate_layout(
+        monkeypatch, ensure_bucketed_orderkey_tables, str(sf), base
     )
     time.sleep(0.01)
     (sf / "lineitem.parquet").write_bytes(b"v2-regenerated")
-    _, root2 = _layout_ident(
-        "bucketed_ok", str(sf), base, tables=("lineitem", "orders")
+    root2 = locate_layout(
+        monkeypatch, ensure_bucketed_orderkey_tables, str(sf), base
     )
     assert root1 != root2
     assert not os.path.exists(root1)
     assert os.path.exists(root2)
+
+
+def test_fingerprint_covers_build_constants(tmp_path, monkeypatch):
+    """Changing _LAYOUT_BUCKETS (or _Z_FILES) must give a new name and
+    path: otherwise files written under the old value are re-registered
+    with the new bucket spec, or served as the new layout."""
+    import ai_etl_studio_spark.operators.extended as X
+
+    sf = str(_mk_sf(tmp_path))
+    for ensure, const in (
+        (X.ensure_bucketed_orderkey_tables, "_LAYOUT_BUCKETS"),
+        (X.ensure_zorder_orders, "_Z_FILES"),
+    ):
+        base = str(tmp_path / const)
+        before = locate_layout(monkeypatch, ensure, sf, base)
+        with monkeypatch.context() as m:
+            m.setattr(X, const, getattr(X, const) * 2)
+            after = locate_layout(monkeypatch, ensure, sf, base)
+        assert os.path.basename(after) != os.path.basename(before), const
+        assert after != before, const
+
+
+def test_relative_and_absolute_sf_dir_share_a_layout(tmp_path, monkeypatch):
+    from ai_etl_studio_spark.operators.extended import (
+        ensure_bucketed_orderkey_tables,
+    )
+
+    sf = _mk_sf(tmp_path)
+    base = str(tmp_path / "bucketed_ok")
+    monkeypatch.chdir(tmp_path)
+    rel = locate_layout(
+        monkeypatch, ensure_bucketed_orderkey_tables, "sf", base
+    )
+    absolute = locate_layout(
+        monkeypatch, ensure_bucketed_orderkey_tables, str(sf), base
+    )
+    assert rel == absolute
+    name = os.path.basename(rel)
+    assert sorted(os.listdir(base)) == [name, name + ".manifest.json"]
 
 
 def test_gc_missing_base_dir_is_noop(tmp_path):
@@ -148,19 +194,3 @@ def test_manifestless_success_dir_is_kept(tmp_path):
     removed = manifest_and_gc(str(base / "fp_live"), [src])
     assert removed == ["fp_partial"]
     assert done.exists()
-
-
-def test_legacy_in_dir_manifest_still_honored(tmp_path):
-    """Pre-r10 layouts carry _manifest.json inside the dir: still read
-    for staleness (source changed -> swept; source live -> kept)."""
-    src = _mk_source(tmp_path, "a.parquet", b"v1")
-    base = tmp_path / "kind"
-    legacy = base / "fp_legacy"
-    legacy.mkdir(parents=True)
-    (legacy / "_manifest.json").write_text(
-        json.dumps(
-            {"sources": {os.path.abspath(src): [2, 0]}}
-        )  # stat mismatch -> stale
-    )
-    removed = manifest_and_gc(str(base / "fp_live"), [src])
-    assert removed == ["fp_legacy"]

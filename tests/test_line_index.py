@@ -7,13 +7,25 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
+from ai_etl_studio_spark import layout_cache
+from ai_etl_studio_spark.operators.analytics import ensure_pagerank_edge_index
 from ai_etl_studio_spark.operators.dedup import (
     ensure_boilerplate_index,
+    ensure_substring_index,
     line_dedup_corpus,
     line_dedup_from_index,
 )
+from ai_etl_studio_spark.operators.extended import (
+    ensure_bucketed_orderkey_tables,
+    ensure_month_dim,
+    ensure_month_partitioned_orders,
+    ensure_zorder_orders,
+)
+from ai_etl_studio_spark.operators.similarity import ensure_pq_code_index
 from ai_etl_studio_spark.plans.guard import explain_str
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, locate_layout
 
 
 def test_index_builds_once_and_serve_matches_scratch(spark, tmp_path):
@@ -48,19 +60,31 @@ def test_serve_plan_has_no_frequency_shuffle(spark, tmp_path):
     assert tree.count("Exchange hashpartitioning") <= 1
 
 
-def test_index_identity_includes_base_dir(tmp_path):
-    """ADVICE r3: the catalog table name must differ per base_dir, or a
-    second ensure_* call with a custom location silently re-points the
-    shared name to different contents."""
-    from ai_etl_studio_spark.operators.analytics import _pagerank_index_ident
-    from ai_etl_studio_spark.operators.dedup import _line_index_ident
-    from ai_etl_studio_spark.operators.similarity import _pq_index_ident
-
-    sf = "/root/testdata/sf0.001"
-    for ident in (_line_index_ident, _pq_index_ident, _pagerank_index_ident):
-        default_tbl, _ = ident(sf)
-        custom_tbl, custom_path = ident(sf, str(tmp_path / "idx"))
-        assert default_tbl != custom_tbl, ident.__name__
-        assert str(tmp_path / "idx") in custom_path
-        # deterministic per (corpus, location)
-        assert custom_tbl == ident(sf, str(tmp_path / "idx"))[0]
+@pytest.mark.parametrize(
+    "ensure",
+    [
+        ensure_pagerank_edge_index,
+        ensure_boilerplate_index,
+        ensure_substring_index,
+        ensure_pq_code_index,
+        ensure_bucketed_orderkey_tables,
+        ensure_month_partitioned_orders,
+        ensure_zorder_orders,
+        ensure_month_dim,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_index_identity_includes_base_dir(ensure, tmp_path, monkeypatch):
+    """ADVICE r3: the layout name must differ per base_dir, or a second
+    ensure_* call with a custom location silently re-points the shared
+    catalog name to different contents."""
+    monkeypatch.setattr(layout_cache, "CACHE_ROOT", str(tmp_path / "default"))
+    custom = str(tmp_path / "idx")
+    default_root = locate_layout(monkeypatch, ensure, SF_DIR)
+    custom_root = locate_layout(monkeypatch, ensure, SF_DIR, custom)
+    assert default_root.startswith(str(tmp_path / "default") + os.sep)
+    assert os.path.dirname(custom_root) == custom
+    assert os.path.basename(default_root) != os.path.basename(custom_root)
+    assert os.path.exists(custom_root + ".manifest.json")
+    # deterministic per (corpus, location)
+    assert locate_layout(monkeypatch, ensure, SF_DIR, custom) == custom_root

@@ -10,14 +10,25 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from ai_etl_studio_spark import layout_cache
 from ai_etl_studio_spark.operators.analytics import (
     PR_BUCKETS,
     ensure_pagerank_edge_index,
     pagerank_bipartite,
     pagerank_from_index,
 )
+from ai_etl_studio_spark.operators.dedup import (
+    ensure_boilerplate_index,
+    ensure_substring_index,
+)
+from ai_etl_studio_spark.operators.extended import (
+    _LAYOUT_BUCKETS,
+    ensure_bucketed_orderkey_tables,
+)
+from ai_etl_studio_spark.operators.similarity import ensure_pq_code_index
 from tests.conftest import SF_DIR
 
 
@@ -81,17 +92,65 @@ def test_reregister_in_fresh_catalog_and_bucket_pruned_join(spark, tmp_path):
     assert plan.count("Exchange hashpartitioning") == 0
 
 
+@pytest.mark.parametrize(
+    "ensure, buckets",
+    [
+        (ensure_pagerank_edge_index, PR_BUCKETS),
+        (ensure_bucketed_orderkey_tables, _LAYOUT_BUCKETS),
+        (ensure_boilerplate_index, None),
+        (ensure_substring_index, None),
+        (ensure_pq_code_index, None),
+    ],
+    ids=lambda v: getattr(v, "__name__", str(v)),
+)
+def test_reregister_without_rebuild_or_jobs(spark, tmp_path, ensure, buckets):
+    """Every catalog layout, dropped from the catalog with its files
+    kept, comes back from the layout_cache re-registration DDL: no
+    rebuild, no Spark job (explicit column list, no schema inference),
+    same schema and location, and the bucket spec restored."""
+    base = str(tmp_path / "idx")
+    out = ensure(spark, SF_DIR, base_dir=base)
+    tables = out if isinstance(out, tuple) else (out,)
+
+    def described(tbl):
+        return {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
+        }
+
+    before = {t: described(t) for t in tables}
+    schemas = {t: spark.table(t).schema for t in tables}
+    successes = {
+        t: os.path.join(before[t]["Location"].removeprefix("file:"), "_SUCCESS")
+        for t in tables
+    }
+    built_at = {t: os.path.getmtime(p) for t, p in successes.items()}
+    for t in tables:
+        spark.sql(f"DROP TABLE {t}")
+
+    sc = spark.sparkContext
+    group = f"reregister-{ensure.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        assert ensure(spark, SF_DIR, base_dir=base) == out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    for t in tables:
+        assert os.path.getmtime(successes[t]) == built_at[t], t
+        after = described(t)
+        assert spark.table(t).schema == schemas[t], t
+        for key in ("Location", "Provider", "Bucket Columns", "Sort Columns"):
+            assert after.get(key) == before[t].get(key), (t, key)
+        num_buckets = str(buckets) if buckets else None
+        assert before[t].get("Num Buckets") == num_buckets, t
+        assert after.get("Num Buckets") == num_buckets, t
+
+
 def test_registered_query_uses_index(spark, tmp_path, monkeypatch):
     # point the default cache at tmp so the registry entry is hermetic
-    import ai_etl_studio_spark.operators.analytics as A
-
-    base = str(tmp_path / "pr_cache")
-    orig = A._pagerank_index_ident
-
-    def patched(sf_dir, base_dir=None):
-        return orig(sf_dir, base_dir or base)
-
-    monkeypatch.setattr(A, "_pagerank_index_ident", patched)
+    monkeypatch.setattr(layout_cache, "CACHE_ROOT", str(tmp_path / "cache"))
     got = [tuple(r) for r in pagerank_from_index(spark, SF_DIR).collect()]
     want = [tuple(r) for r in pagerank_bipartite(spark, SF_DIR).collect()]
     assert got == want
